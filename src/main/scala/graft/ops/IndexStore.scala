@@ -59,6 +59,31 @@ import graft.Core._
   * Heavy work (channel writes) overlaps freely; only publication
   * serializes.
   *
+  * == One executor ==
+  *
+  * Every write entry point runs through [[transact]], the only caller
+  * of [[beginSnap]], [[stageConcurrently]] (bar the text family's own
+  * postings/doc_lens fan-out) and [[commitSnap]]. An entry point reads
+  * its base ONCE, runs all of its refusals — cheap schema checks
+  * first, then the read-only probes ([[probeConcurrently]], delivered
+  * in declaration order) — and only then hands `transact` its stage
+  * blocks, so refusal precedence never depends on a staging thread.
+  * (One stage block refuses by itself: a projected append checks the
+  * raw frame and the stored projection identity inside its own block,
+  * overlapped with the other families' staging; no sibling block
+  * refuses, so nothing races it.)
+  * `transact` opens a uniquely-named staging snapshot, runs the
+  * blocks concurrently (each writes only its own channel
+  * subdirectories and RETURNS the [[Staged]] entries it wrote),
+  * fires the [[crashAfterChannel]] hook once per staged channel in
+  * declaration order, drops data-less parquet paths (an empty batch's
+  * channel dir holds no part file and no schema), and merges the
+  * entries onto `prior -- drop`: an APPEND entry extends the prior
+  * path list (or creates the channel), a REPLACE entry supersedes it.
+  * Each channel family has one stage function shared by its writes
+  * and its folds; a write is the same function over no prior stats,
+  * with the family's channels in `drop`.
+  *
   * Appends are COPY-FREE: an append writes only the batch's new files
   * and carries the prior snapshot's channel paths forward in the new
   * manifest (a channel is a PATH LIST; readers union them), so append
@@ -90,31 +115,61 @@ object IndexStore {
   private[graft] final case class Channel(paths: Seq[String],
       partitionBy: String, sort: String)
 
-  /** Test-only failpoint: throw AFTER the named channel's files land
-    * but BEFORE the snapshot commits — the crash-injection hook the
-    * atomicity test drives. Never set outside tests.
-    *
-    * NOTE (ADVICE r16): since the staging writes run concurrently
-    * (stageConcurrently), this fires on a staging-pool thread and the
-    * siblings are interrupted mid-write — so WHICH sibling channels'
-    * staging files exist after an injected crash is nondeterministic,
-    * run to run. Crash tests must pin only commit-visible state (the
-    * pointer never flips, the retry lands); leak accounting keys on
-    * committed snapshots + vacuum, never on aborted staging-dir
-    * contents. */
+  /** Test-only failpoint: [[transact]] throws once the named channel
+    * is staged but BEFORE the snapshot commits — the crash-injection
+    * hook the atomicity tests drive. Never set outside tests. It fires
+    * after every stage block has returned, so an injected crash leaves
+    * the whole staging dir written and never committed. */
   @volatile private[graft] var crashAfterChannel: Option[String] = None
   private def maybeCrash(ch: String): Unit =
     if (crashAfterChannel.contains(ch))
       throw new RuntimeException(s"injected crash after channel $ch")
 
-  /** Stage INDEPENDENT channel writes of one snapshot concurrently
-    * (VERDICT r13 next #4): the unified fold's latency is commit
-    * fan-out — dozens of small sequential parquet jobs per pair-atomic
-    * snapshot, each paying scheduler latency, not CPU (SCALE.md
-    * attributes the 100× q153 band to exactly this) — so the
-    * independent families overlap on the scheduler. Every block writes
-    * its own staging subdirectory; the commit point (manifest +
-    * pointer rename) stays single and last, OUTSIDE this helper.
+  /** One channel entry a stage block wrote into the transaction's
+    * staging snapshot: an `append` entry extends the prior path list,
+    * any other replaces it. */
+  private final case class Staged(name: String, ch: Channel, append: Boolean)
+
+  /** A stage block: given the staging snapshot's name, write channels
+    * under it and return their entries. */
+  private type Stage = String => Seq[Staged]
+
+  /** THE snapshot transaction (see the object scaladoc): stage the
+    * blocks concurrently into one staging snapshot, fire the crash
+    * hook per staged channel, drop data-less parquet paths, merge the
+    * entries onto `prior -- drop`, and publish against `base`. */
+  private def transact(root: String, base: Option[String],
+      prior: Map[String, Channel], drop: Iterable[String] = Nil)(
+      stages: Stage*): Unit = {
+    val snap = beginSnap(root)
+    val staged = stageConcurrently(stages.map(st => () => st(snap)): _*).flatten
+    staged.foreach(e => maybeCrash(e.name))
+    val kept = prior -- drop -- staged.filterNot(_.append).map(_.name)
+    val merged = staged.flatMap { e =>
+      val fresh = e.ch.paths.filter(p => hasData(s"$root/$p"))
+      val ch = kept.get(e.name)
+        .fold(e.ch.copy(paths = fresh))(c => c.copy(paths = c.paths ++ fresh))
+      if (ch.paths.isEmpty) None else Some(e.name -> ch)
+    }
+    commitSnap(root, snap, kept ++ merged, base)
+  }
+
+  /** Write `df` as channel `name` of staging snapshot `snap`. */
+  private def stageParquet(df: DataFrame, root: String, snap: String,
+      name: String, append: Boolean, partitionBy: String = "",
+      sort: String = ""): Staged = {
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy) else w)
+      .parquet(s"$root/$snap/$name")
+    Staged(name, Channel(Seq(s"$snap/$name"), partitionBy, sort), append)
+  }
+
+  /** Run INDEPENDENT blocks concurrently and return their results in
+    * declaration order (VERDICT r13 next #4): a store write's latency
+    * is commit fan-out — dozens of small parquet jobs per snapshot,
+    * each paying scheduler latency, not CPU (SCALE.md attributes the
+    * 100× q153 band to exactly this) — so independent channel writes
+    * overlap on the scheduler.
     *
     * Execution (ADVICE r14): a DEDICATED daemon pool sized to the
     * block fan-out — never ExecutionContext.global, whose shared pool
@@ -130,22 +185,17 @@ object IndexStore {
     * so a wedged writer can no longer hang the fold forever, then the
     * observed failure is rethrown as-is (crash-injection semantics:
     * the injected exception type reaches the caller unchanged). The
-    * deterministic refusals all fire before staging starts (the
-    * hoisted cheap-refusal discipline), so first-to-complete
-    * precedence here only ever races genuine I/O faults. */
-  private def stageConcurrently(blocks: (() => Unit)*): Unit = {
+    * deterministic refusals all fire before staging starts, so
+    * first-to-complete precedence here only ever races genuine I/O
+    * faults. */
+  private def stageConcurrently[A](blocks: (() => A)*): Seq[A] = {
     import java.util.concurrent._
-    if (blocks.isEmpty) return
-    val seq = new java.util.concurrent.atomic.AtomicInteger()
-    val pool = Executors.newFixedThreadPool(blocks.size,
-      (r: Runnable) => {
-        val t = new Thread(r, s"graft-stage-${seq.incrementAndGet()}")
-        t.setDaemon(true); t
-      })
+    if (blocks.isEmpty) return Seq.empty
+    val pool = daemonPool(blocks.size, "stage")
     try {
-      val ecs = new ExecutorCompletionService[Unit](pool)
+      val ecs = new ExecutorCompletionService[A](pool)
       val futs = blocks.map(b =>
-        ecs.submit(new Callable[Unit] { def call(): Unit = b() }))
+        ecs.submit(new Callable[A] { def call(): A = b() }))
       var done = 0
       while (done < blocks.size) {
         try { ecs.take().get(); done += 1 } catch {
@@ -169,6 +219,7 @@ object IndexStore {
             throw e.getCause
         }
       }
+      futs.map(_.get()).toSeq
     } finally pool.shutdown()
   }
 
@@ -183,30 +234,23 @@ object IndexStore {
     * bounded by the probes themselves, and the store is untouched
     * either way. Each probe is a separate small Spark job that pays
     * mostly scheduler latency (guide §2.6 — the same measured shape
-    * as the channel writes stageConcurrently overlaps).
+    * as the channel writes stageConcurrently overlaps). Probes RETURN
+    * their results; each f.get() is the happens-before edge.
     *
     * Resource contract (ADVICE r16): a sibling's failure interrupts
-    * the other probes at ARBITRARY points (shutdownNow), and a probe's
-    * write to an outer var has NO happens-before edge with the caller
-    * when a DIFFERENT probe's get() is what threw — so a probe that
-    * must allocate a releasable resource (the gated fold's census
-    * localCheckpoint is the one sanctioned case) may not hand it out
-    * through a plain var. It must publish through an AtomicReference
-    * CAS BEFORE any materialization job, release it itself when the
-    * CAS loses, and the owner's finally must getAndSet a tombstone —
-    * the appendUnifiedGated pattern. Plain result delivery (outer var
-    * written by the probe, read by the caller after a SUCCESSFUL
-    * probeConcurrently) stays safe: each f.get() is the edge. */
+    * the other probes at ARBITRARY points (shutdownNow) — so a probe
+    * that must allocate a releasable resource (the gated fold's census
+    * localCheckpoint is the one sanctioned case) cannot hand it out
+    * through its result, which is lost when a DIFFERENT probe's get()
+    * throws. It must publish through an AtomicReference CAS BEFORE any
+    * materialization job, release it itself when the CAS loses, and
+    * the owner's finally must getAndSet a tombstone — the
+    * appendUnifiedGated pattern. */
   private def probeConcurrently[A](blocks: (() => A)*): Seq[A] = {
     import java.util.concurrent._
     if (blocks.sizeIs <= 1) blocks.map(_()).toSeq
     else {
-      val seq = new java.util.concurrent.atomic.AtomicInteger()
-      val pool = Executors.newFixedThreadPool(blocks.size,
-        (r: Runnable) => {
-          val t = new Thread(r, s"graft-probe-${seq.incrementAndGet()}")
-          t.setDaemon(true); t
-        })
+      val pool = daemonPool(blocks.size, "probe")
       try {
         val futs = blocks.map(b =>
           pool.submit(new Callable[A] { def call(): A = b() }))
@@ -215,6 +259,15 @@ object IndexStore {
           catch { case e: ExecutionException => throw e.getCause }).toSeq
       } finally pool.shutdownNow()
     }
+  }
+
+  /** A dedicated pool of `n` daemon threads named `graft-<tag>-<i>`. */
+  private def daemonPool(n: Int, tag: String) = {
+    val seq = new java.util.concurrent.atomic.AtomicInteger()
+    java.util.concurrent.Executors.newFixedThreadPool(n, (r: Runnable) => {
+      val t = new Thread(r, s"graft-$tag-${seq.incrementAndGet()}")
+      t.setDaemon(true); t
+    })
   }
 
   private def pointer(root: String) = Paths.get(root, "_current")
@@ -483,18 +536,18 @@ object IndexStore {
   private[graft] def bloomBlob(root: String): Option[java.nio.file.Path] =
     channels(root).get("bloom").map(ch => Paths.get(s"$root/${ch.paths.head}"))
 
-  /** True when a staged parquet dir actually holds data files — an
-    * EMPTY batch's channel write produces a part-file-less dir that a
-    * later read cannot infer a schema from, so appends only record
-    * paths that carry rows (an empty append is a manifest-only
-    * transaction: carried-forward paths + merged stats). */
-  private def hasData(abs: String): Boolean =
-    Option(new java.io.File(abs).listFiles()).exists(_.exists(f =>
-      (f.isFile && f.getName.startsWith("part-")) ||
-        (f.isDirectory && hasData(f.getPath))))
-
-  private def relIfData(root: String, rel: String): Seq[String] =
-    if (hasData(s"$root/$rel")) Seq(rel) else Seq.empty
+  /** True when a staged channel path holds data: the bloom blob file,
+    * or a parquet dir with a part file — an EMPTY batch's channel
+    * write produces a part-file-less dir that a later read cannot
+    * infer a schema from, so [[transact]] records only paths that
+    * carry rows (an empty append is a manifest-only transaction:
+    * carried-forward paths + merged stats). */
+  private def hasData(abs: String): Boolean = {
+    val f = new java.io.File(abs)
+    f.isFile || Option(f.listFiles()).exists(_.exists(c =>
+      (c.isFile && c.getName.startsWith("part-")) ||
+        (c.isDirectory && hasData(c.getPath))))
+  }
 
   // ---------------------------------------------------------------
   // dedup channel family
@@ -529,79 +582,84 @@ object IndexStore {
     * OR-merge amortizes away). Steady-state folds must not move it. */
   @volatile private[graft] var bloomRebuilds: Long = 0L
 
-  /** Build + stage the blob for `fps` at `capacity`; returns its rel
-    * path. */
-  private def stageBloom(s: SparkSession, fps: DataFrame, root: String,
-      snap: String, capacity: Long, estItems: Long): Option[String] = {
-    val bits = fps.selectExpr(s"bloom_agg(xxhash64(fp), ${capacity}L) AS b")
-      .head().getAs[Array[Byte]]("b")
-    val rel = s"$snap/bloom/fingerprints.c$capacity.n$estItems.bloom"
-    new java.io.File(s"$root/$snap/bloom").mkdirs()
-    Files.write(Paths.get(s"$root/$rel"), bits)
-    Some(rel)
-  }
+  private val dedupChannels =
+    Seq("band_keys", "fingerprints", "sim_blocks", "bloom", "mix_census")
 
-  /** Aggregate the bloom blob over a fingerprint frame into the
-    * staging snapshot at the doubling-schedule capacity (2× headroom
+  /** The dedup family's stage blocks for `batch` (`batchN` distinct
+    * docs) onto `prior`: band rows, fingerprints (+ the bloom, chained
+    * after its own fingerprints write) and simhash blocks, each
+    * appended. The simhash channel holds the 60-bit fingerprint's
+    * pigeonhole block rows, partitioned by block so a screen's (b, bv)
+    * equi-join prunes to one block partition per probe — it catches
+    * term-DISTRIBUTION twins (q128's family) that shingle-set banding
+    * can miss. */
+  private def dedupDelta(s: SparkSession, root: String, batch: DataFrame,
+      prior: Map[String, Channel], batchN: => Long): Seq[Stage] = Seq(
+    snap => Seq(stageParquet(Dedup.toBandRowsPublic(s, batch), root, snap,
+      "band_keys", append = true, partitionBy = "band")),
+    snap => stageParquet(fingerprints(batch), root, snap, "fingerprints",
+      append = true) +: bloomDelta(s, root, prior, batch, batchN, snap).toSeq,
+    snap => Seq(stageParquet(Dedup.simBlocks(Dedup.simhash60(batch)), root,
+      snap, "sim_blocks", append = true, partitionBy = "b")))
+
+  /** The bloom blob after folding `batch` into `prior`, or None (the
+    * manifest entry is then dropped — a lingering undersized sketch
+    * would degrade its FP rate). A store with no fingerprints yet gets
+    * the batch's blob at the doubling-schedule capacity (2× headroom
     * worst case, so FPP stays at or under the sizing design point —
-    * Spark's 3% default — until estItems crosses capacity); returns
-    * the blob's rel path, or None past the gate (the manifest entry is
-    * simply omitted then — a lingering undersized sketch would degrade
-    * its FP rate, so crossing the gate on append DROPS the channel). */
-  private def writeBloomInto(s: SparkSession, fps: DataFrame,
-      root: String, snap: String): Option[String] = {
-    val n0 = fps.count()
-    if (n0 > 0 && n0 <= bloomMaxItems(s))
-      stageBloom(s, fps, root, snap, nextPow2(math.max(1024L, n0)), n0)
-    else None
-  }
-
-  /** The fold's bloom maintenance, O(batch) in the steady state: build
-    * the BATCH's blob at the stored blob's capacity and bitwise
-    * OR-merge the two (exact — see [[BloomBlobName]]), touching no
-    * stored fingerprint row. The fingerprint-CHANNEL re-agg the
-    * round-7 fold paid EVERY append now runs only when estItems
-    * crosses the capacity (a doubling-schedule rebuild at
-    * nextPow2(newN) — amortized O(1) rebuilds per corpus doubling,
-    * each restoring the ≤ 3% FPP design point with ≥ 1× headroom) or
-    * when the blob name predates this contract. Crossing
-    * `graft.bloom.maxItems` drops the channel, as before; a store
-    * with no blob (past the gate) never re-creates one on append. */
-  private def mergeBloomInto(s: SparkSession, root: String,
-      prior: Map[String, Channel], batchFps: DataFrame, batchN: Long,
-      mergedFps: () => DataFrame, snap: String): Option[String] =
-    prior.get("bloom").flatMap { ch =>
-      val fileName = Paths.get(ch.paths.head).getFileName.toString
-      fileName match {
-        case BloomBlobName(_, n) if n.toLong + batchN > bloomMaxItems(s) =>
+    * Spark's 3% default — until estItems crosses capacity). A fold is
+    * O(batch) in the steady state: the BATCH's blob is built at the
+    * stored blob's capacity and bitwise OR-merged in (exact — see
+    * [[BloomBlobName]]), touching no stored fingerprint row. The
+    * fingerprint-CHANNEL re-agg runs only when estItems crosses the
+    * capacity (amortized O(1) rebuilds per corpus doubling, each
+    * restoring the ≤ 3% FPP design point) or when the blob name
+    * predates this contract. Crossing `graft.bloom.maxItems` drops the
+    * channel; a store with no blob (past the gate) never re-creates
+    * one on append. */
+  private def bloomDelta(s: SparkSession, root: String,
+      prior: Map[String, Channel], batch: DataFrame, batchN: => Long,
+      snap: String): Option[Staged] = {
+    def bits(fps: DataFrame, cap: Long) =
+      fps.selectExpr(s"bloom_agg(xxhash64(fp), ${cap}L) AS b")
+        .head().getAs[Array[Byte]]("b")
+    def put(blob: Array[Byte], cap: Long, est: Long) = {
+      val rel = s"$snap/bloom/fingerprints.c$cap.n$est.bloom"
+      new java.io.File(s"$root/$snap/bloom").mkdirs()
+      Files.write(Paths.get(s"$root/$rel"), blob)
+      Staged("bloom", Channel(Seq(rel), "", ""), append = false)
+    }
+    def build(fps: DataFrame, n: Long) =
+      if (n > 0 && n <= bloomMaxItems(s)) {
+        val cap = nextPow2(n)
+        Some(put(bits(fps, cap), cap, n))
+      } else None
+    if (!prior.contains("fingerprints")) build(fingerprints(batch), batchN)
+    else prior.get("bloom").flatMap { ch =>
+      lazy val n = batchN
+      Paths.get(ch.paths.head).getFileName.toString match {
+        case BloomBlobName(_, est) if est.toLong + n > bloomMaxItems(s) =>
           None // gate crossing: channel dropped
-        case BloomBlobName(c, n) if n.toLong + batchN <= c.toLong =>
-          val cap = c.toLong
-          val newEst = n.toLong + batchN
-          val batchBits = batchFps
-            .selectExpr(s"bloom_agg(xxhash64(fp), ${cap}L) AS b")
-            .head().getAs[Array[Byte]]("b")
+        case BloomBlobName(c, est) if est.toLong + n <= c.toLong =>
           val merged = org.apache.spark.util.sketch.BloomFilter.readFrom(
             new java.io.ByteArrayInputStream(
               Files.readAllBytes(Paths.get(s"$root/${ch.paths.head}"))))
           merged.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(batchBits)))
+            new java.io.ByteArrayInputStream(bits(fingerprints(batch), c.toLong))))
           val bos = new java.io.ByteArrayOutputStream()
           merged.writeTo(bos)
-          val rel = s"$snap/bloom/fingerprints.c$cap.n$newEst.bloom"
-          new java.io.File(s"$root/$snap/bloom").mkdirs()
-          Files.write(Paths.get(s"$root/$rel"), bos.toByteArray)
-          Some(rel)
+          Some(put(bos.toByteArray, c.toLong, est.toLong + n))
         case _ =>
           // capacity crossing (or a pre-contract blob name): the one
-          // re-agg, at doubled capacity
+          // re-agg over the stored fingerprints plus the staged batch
           bloomRebuilds += 1
-          writeBloomInto(s, mergedFps(), root, snap)
+          val fps = s.read.parquet((prior("fingerprints").paths :+
+            s"$snap/fingerprints").filter(p => hasData(s"$root/$p"))
+            .map(p => s"$root/$p"): _*).select(col("fp"))
+          build(fps, fps.count())
       }
     }
-
-  private val dedupChannels =
-    Seq("band_keys", "fingerprints", "sim_blocks", "bloom", "mix_census")
+  }
 
   /** The governance census of a batch — Selection.censusBins (source
     * × feature × bin counts over all FOUR marginals, n_chars /
@@ -662,6 +720,12 @@ object IndexStore {
         "(or re-fold its history) with this build")
   }
 
+  /** The governance family's stage block: one census delta. Bin
+    * counts are additive, so a fold appends it and readers sum across
+    * the path list. */
+  private def censusDelta(root: String, bins: DataFrame): Stage =
+    snap => Seq(stageParquet(bins, root, snap, "mix_census", append = true))
+
   /** Persist the dedup index of `docs` under `out` (one snapshot
     * transaction; any cluster_labels / other-family channels already
     * present are carried forward untouched). `governed = true` opts
@@ -681,61 +745,11 @@ object IndexStore {
       "write: empty docs frame — an index store cannot be initialized " +
         "from zero rows (its parquet channels would be schema-less and " +
         "every later screen/append would fail); index a non-empty corpus")
-    // deterministic refusal hoisted ahead of concurrent staging (the
-    // writeUnified discipline): the census COLUMN check is schema-only
-    // and must not race the other channels' staging threads
-    if (governed) censusRequired("write", docs)
+    val census = Option.when(governed)(censusRequired("write", docs))
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    // the four channel families derive independently from `docs`, and
-    // each write is a small job paying mostly scheduler latency, not
-    // CPU (guide §2.6 / SCALE.md "commit-latency-bound") — stage them
-    // concurrently like writeUnified; the commit stays single + last.
-    // Only the bloom chains after its own fingerprints write (one
-    // thread, same block).
-    var censusRel: Option[(String, Channel)] = None
-    var bloomRel: Option[String] = None
-    stageConcurrently(
-      () => {
-        Dedup.toBandRowsPublic(s, docs)
-          .write.mode(SaveMode.Overwrite).partitionBy("band")
-          .parquet(s"$out/$snap/band_keys")
-        maybeCrash("band_keys")
-      },
-      () => {
-        val fps = fingerprints(docs)
-        fps.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/fingerprints")
-        maybeCrash("fingerprints")
-        bloomRel = writeBloomInto(s, fps, out, snap)
-      },
-      // simhash channel: the 60-bit fingerprint's pigeonhole block rows,
-      // partitioned by block so a screen's (b, bv) equi-join prunes to
-      // one block partition per probe — catches term-DISTRIBUTION twins
-      // (q128's family) that shingle-set banding can miss
-      () => {
-        Dedup.simBlocks(Dedup.simhash60(docs))
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$out/$snap/sim_blocks")
-        maybeCrash("sim_blocks")
-      },
-      // a governed write initializes the census; every later fold must
-      // extend it (the append refuses column-less batches rather than
-      // silently holing the governance timeline)
-      () => censusRel = if (governed) Some {
-        val c = censusRequired("write", docs)
-        c.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/mix_census")
-        maybeCrash("mix_census")
-        "mix_census" -> Channel(relIfData(out, s"$snap/mix_census"), "", "")
-      } else None)
-    // data-less parquet dirs (an empty corpus write) are not committed
-    // — a later read of a part-file-less path cannot infer a schema
-    commitSnap(out, snap, prior -- dedupChannels ++ (Map(
-      "band_keys" -> Channel(relIfData(out, s"$snap/band_keys"), "band", ""),
-      "fingerprints" -> Channel(relIfData(out, s"$snap/fingerprints"), "", ""),
-      "sim_blocks" -> Channel(relIfData(out, s"$snap/sim_blocks"), "b", "")) ++
-      censusRel)
-      .filter(_._2.paths.nonEmpty) ++
-      bloomRel.map(p => "bloom" -> Channel(Seq(p), "", "")), base)
+    transact(out, base, prior, dedupChannels)(
+      dedupDelta(s, out, docs, Map.empty, docs.count()) ++
+        census.map(censusDelta(out, _)): _*)
   }
 
   /** q71's decisions for `batch`, from the stored index only:
@@ -840,16 +854,13 @@ object IndexStore {
     require(!docs.isEmpty,
       "writeClusters: empty docs frame — see write()")
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    val labels = Dedup.clusterLabelsFor(s, docs)
-    try labels.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/cluster_labels")
-    // the CC run's final-round checkpoint is only needed until the
-    // labels land in parquet
-    finally releaseCheckpoint(labels)
-    maybeCrash("cluster_labels")
-    commitSnap(out, snap,
-      prior + ("cluster_labels" -> Channel(Seq(s"$snap/cluster_labels"), "", "")),
-      base)
+    transact(out, base, prior)(snap => {
+      val labels = Dedup.clusterLabelsFor(s, docs)
+      try Seq(stageParquet(labels, out, snap, "cluster_labels", append = false))
+      // the CC run's final-round checkpoint is only needed until the
+      // labels land in parquet
+      finally releaseCheckpoint(labels)
+    })
   }
 
   /** Merge an incoming batch into the persisted clustering WITHOUT
@@ -963,7 +974,7 @@ object IndexStore {
     *    estItems crossing the capacity triggers the one
     *    doubling-schedule re-agg (restoring the FPP design point);
     *    crossing `graft.bloom.maxItems` drops the channel
-    *    ([[mergeBloomInto]]).
+    *    ([[bloomDelta]]).
     *
     * The whole fold is ONE snapshot transaction: a crash anywhere
     * before the pointer flip leaves readers on the previous consistent
@@ -980,20 +991,23 @@ object IndexStore {
       base: Option[String], prior: Map[String, Channel],
       batch: DataFrame): Unit = {
     graft.functions.BloomFuncs.register(s)
-    // generational guard FIRST (in refusal precedence — probe delivery
-    // is declaration-ordered) and before any channel delta is staged,
-    // so an old-format census refuses with no orphaned staging dir
-    // (the guard's own contract). The replay guard overlaps it on the
-    // scheduler: same replay contract as the text/vector/media appends
-    // — an exact at-least-once redelivery of an already-folded batch
-    // is a no-op (re-folding would duplicate fingerprint/band rows and
-    // inflate the bloom's estItems), partial overlap means the caller
-    // skipped screenBatch and is refused.
+    // generational guard FIRST (probe delivery is declaration-ordered),
+    // so an old-format census refuses before any delta is staged. The
+    // replay guard overlaps it on the scheduler: same replay contract
+    // as the text/vector/media appends — an exact at-least-once
+    // redelivery of an already-folded batch is a no-op (re-folding
+    // would duplicate fingerprint/band rows and inflate the bloom's
+    // estItems), partial overlap means the caller skipped screenBatch
+    // and is refused.
     probeConcurrently[Option[Long]](
       () => { if (prior.contains("mix_census"))
         censusFormatGuard(s, indexDir, prior, "append"); None },
       () => appendGuard("append", batch, "doc_id",
         channelFrom(s, indexDir, prior, "fingerprints")))(1).foreach { batchN =>
+      // governed stores extend the census every fold; the schema
+      // refusal fires here, before staging
+      val census = Option.when(prior.contains("mix_census"))(
+        censusRequired("append", batch))
       // the label DELTA is computed EAGERLY (localCheckpoint) before
       // the new snapshot stages: the merge must see the pre-append
       // band index. O(batch-driven changes) rows — the fold's write
@@ -1015,78 +1029,12 @@ object IndexStore {
       // released on EVERY exit: a failure (crash injection, lost OCC
       // race) must not strand blocks across retries, and after a
       // successful commit the parquet delta holds the rows
-      try {
-      val snap = beginSnap(indexDir)
-      // governed stores extend the census every fold (format-guarded
-      // at the top of appendFrom, before any staging); the batch's bin
-      // counts are additive, so readers just sum across the path list.
-      // The frame (and its schema refusal) is built BEFORE the staging
-      // threads launch — the hoisted cheap-refusal discipline.
-      val census = if (prior.contains("mix_census"))
-        Some(censusRequired("append", batch))
-      else None
-      // the channel deltas derive independently from `batch`; each is
-      // a small job paying mostly scheduler latency (guide §2.6 /
-      // SCALE.md "commit-latency-bound") — stage concurrently like
-      // writeUnified. The bloom merge chains after its own
-      // fingerprints write (its rebuild arm reads the staged path).
-      var bloomRel: Option[String] = None
-      stageConcurrently(
-        () => {
-          Dedup.toBandRowsPublic(s, batch)
-            .write.mode(SaveMode.Overwrite).partitionBy("band")
-            .parquet(s"$indexDir/$snap/band_keys")
-          maybeCrash("band_keys")
-        },
-        () => {
-          fingerprints(batch)
-            .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/fingerprints")
-          maybeCrash("fingerprints")
-          val fpPaths = prior.get("fingerprints").map(_.paths).getOrElse(Seq.empty) ++
-            relIfData(indexDir, s"$snap/fingerprints")
-          def mergedFps() = s.read.parquet(fpPaths.map(p => s"$indexDir/$p"): _*)
-            .select(col("fp"))
-          bloomRel = mergeBloomInto(s, indexDir, prior, fingerprints(batch),
-            batchN, () => mergedFps(), snap)
-        },
-        () => {
-          Dedup.simBlocks(Dedup.simhash60(batch))
-            .write.mode(SaveMode.Overwrite).partitionBy("b")
-            .parquet(s"$indexDir/$snap/sim_blocks")
-          maybeCrash("sim_blocks")
-        },
-        () => {
-          labelDelta.foreach(_.write.mode(SaveMode.Overwrite)
-            .parquet(s"$indexDir/$snap/cluster_labels"))
-          maybeCrash("cluster_labels")
-        },
-        () => {
-          census.foreach(_.write.mode(SaveMode.Overwrite)
-            .parquet(s"$indexDir/$snap/mix_census"))
-          maybeCrash("mix_census")
-        })
-      // prior.get, not prior(): a corpus whose docs produced no band /
-      // simhash rows has those channels dropped at write, and the
-      // first append that DOES produce them must create the entries
-      def appended(name: String, rel: String, partBy: String) = {
-        val fresh = relIfData(indexDir, rel)
-        name -> prior.get(name)
-          .map(ch => ch.copy(paths = ch.paths ++ fresh))
-          .getOrElse(Channel(fresh, partBy, ""))
-      }
-      commitSnap(indexDir, snap, prior - "bloom" ++ Seq(
-        appended("band_keys", s"$snap/band_keys", "band"),
-        appended("fingerprints", s"$snap/fingerprints", ""),
-        appended("sim_blocks", s"$snap/sim_blocks", "b"))
-        .filter(_._2.paths.nonEmpty).toMap ++
-        labelDelta.map(_ => appended("cluster_labels",
-          s"$snap/cluster_labels", "")._2)
-          .map("cluster_labels" -> _) ++
-        census.map(_ => appended("mix_census",
-          s"$snap/mix_census", "")._2)
-          .map("mix_census" -> _) ++
-        bloomRel.map(p => "bloom" -> Channel(Seq(p), "", "")), base)
-      } finally labelDelta.foreach(releaseCheckpoint)
+      try transact(indexDir, base, prior, Seq("bloom"))(
+        dedupDelta(s, indexDir, batch, prior, batchN) ++
+          labelDelta.map(d => (snap: String) => Seq(stageParquet(d, indexDir,
+            snap, "cluster_labels", append = true))) ++
+          census.map(censusDelta(indexDir, _)): _*)
+      finally labelDelta.foreach(releaseCheckpoint)
     }
   }
 
@@ -1215,12 +1163,39 @@ object IndexStore {
   private def batchDriftVsStoreFrom(s: SparkSession, indexDir: String,
       prior: Map[String, Channel], batch: DataFrame,
       anchor: String): DataFrame =
+    driftVsAnchor(s, indexDir, prior, Selection.censusBins(batch), anchor)
+
+  /** PSI of the non-anchor sources of census `bins` against the
+    * stored anchor census of manifest `prior`. */
+  private def driftVsAnchor(s: SparkSession, root: String,
+      prior: Map[String, Channel], bins: DataFrame,
+      anchor: String): DataFrame =
     Selection.psiFromBins(
-      channelFrom(s, indexDir, prior, "mix_census")
+      channelFrom(s, root, prior, "mix_census")
         .filter(col("source") === anchor)
-        .unionByName(
-          Selection.censusBins(batch).filter(col("source") =!= anchor)),
+        .unionByName(bins.filter(col("source") =!= anchor)),
       anchor)
+
+  /** One gate-report row: (source, n_docs, psi_nchars, psi_ntokens,
+    * psi_nonalpha, psi_tokhash, psi_max, held). */
+  private type GateRow = (String, Long, Double, Double, Double, Double, Double, Boolean)
+
+  /** The four-marginal gate verdicts of a drift frame, collected
+    * driver-side (O(sources) rows): a source is held when ANY
+    * marginal's PSI trips — psi_max is the greatest of the rnd4'd
+    * per-feature values (the token marginal joining past its evidence
+    * floor), so a content shift at constant length (q163), at constant
+    * length AND token count (q166), or a vocabulary swap invisible to
+    * all three doc marginals (q167) holds exactly like a length
+    * shift. */
+  private def gateRows(s: SparkSession, drift: DataFrame,
+      maxPsi: Double): Seq[GateRow] = {
+    import s.implicits._
+    drift.select(col("source"), col("n_docs"), col("psi_nchars"),
+        col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
+        col("psi_max"), (col("psi_max") > maxPsi).as("held"))
+      .as[GateRow].collect().toSeq
+  }
 
   /** [[screenAndFold]] behind the drift CIRCUIT BREAKER: batch
     * sources whose batch-vs-anchor PSI exceeds `maxPsi` are HELD OUT
@@ -1254,25 +1229,13 @@ object IndexStore {
       batch: DataFrame, anchor: String,
       maxPsi: Double = 0.25, orderGate: Boolean = false,
       maxOrderPsi: Double = 0.25): (DataFrame, DataFrame) = {
-    import s.implicits._
     // ONE (base, prior) capture for the whole gate+fold: the census
     // the verdict is computed against is the census the fold commits
     // against — a rival landing anywhere between gate and append is a
     // detected OCC conflict, never a silently-stale verdict.
     val (base, prior) = baseRequired(indexDir)
-    // four-feature gate (rounds 11-13): a source is held when ANY
-    // marginal's PSI trips — psi_max is the greatest of the rnd4'd
-    // per-feature values (the token marginal joining past its evidence
-    // floor), so a content shift at constant length (q163), at
-    // constant length AND token count (q166), or a vocabulary swap
-    // invisible to all three doc marginals (q167) holds exactly like
-    // a length shift
-    val rep = batchDriftVsStoreFrom(s, indexDir, prior, batch, anchor)
-      .select(col("source"), col("n_docs"), col("psi_nchars"),
-        col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
-        col("psi_max"), (col("psi_max") > maxPsi).as("held"))
-      .as[(String, Long, Double, Double, Double, Double, Double, Boolean)]
-      .collect().toSeq
+    val rep = gateRows(s,
+      batchDriftVsStoreFrom(s, indexDir, prior, batch, anchor), maxPsi)
     val ord = orderVerdict(s, batch, anchor, orderGate, maxOrderPsi)
     val heldSrcs = (rep.filter(_._8).map(_._1) ++
       ord.collect { case (src, (_, true)) => src }).distinct
@@ -1305,8 +1268,7 @@ object IndexStore {
     * `psi_order` added and the order verdict folded into `held` only
     * when the order gate ran (schema back-compat for every existing
     * gate consumer). */
-  private def gateReport(s: SparkSession,
-      rep: Seq[(String, Long, Double, Double, Double, Double, Double, Boolean)],
+  private def gateReport(s: SparkSession, rep: Seq[GateRow],
       ord: Map[String, (Double, Boolean)], orderGate: Boolean): DataFrame = {
     import s.implicits._
     if (!orderGate)
@@ -1398,39 +1360,37 @@ object IndexStore {
         "through an ungated fold; re-baselining now would launder that " +
         "drift into the new reference. Rebuild or re-fold the store " +
         "with the gate instead")
-    val snap = beginSnap(root)
-    stored.filter(col("source") =!= anchor)
-      .unionByName(Selection.censusBins(newAnchorDocs))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/mix_census")
-    maybeCrash("mix_census")
-    commitSnap(root, snap, prior + ("mix_census" ->
-      Channel(relIfData(root, s"$snap/mix_census"), "", "")), base)
+    transact(root, base, prior, Seq("mix_census"))(censusDelta(root,
+      stored.filter(col("source") =!= anchor)
+        .unionByName(Selection.censusBins(newAnchorDocs))))
   }
 
   // ---------------------------------------------------------------
   // media channel family
   // ---------------------------------------------------------------
 
-  /** Stage the media family's 1-row census (`media_stats`:
-    * n_payloads, n_blocks) into `snap` — the stats/vec_stats pattern
-    * (VERDICT r14 next #5): doc/media coverage divergence (the q165
-    * lockstep) was invisible to [[describeStore]]'s facts column
-    * without running the full q165 recompute; now it is a 1-row read
-    * in every describe/At/Timeline row. n_payloads counts the stored
-    * FINGERPRINT rows (sub-window payloads never land, matching the
-    * channel's own semantics); n_blocks the physical block rows —
-    * exactly 4 per fingerprint by the pigeonhole construction, so the
-    * 4:1 ratio is the integrity invariant a channel/census mismatch
-    * would expose. Merged per append with exact long arithmetic,
-    * inside the SAME commit as the media_sim_blocks delta. */
-  private def writeMediaStats(s: SparkSession, root: String, snap: String,
-      nPayloads: Long, nBlocks: Long): Map[String, Channel] = {
+  private val mediaChannels = Seq("media_sim_blocks", "media_stats")
+
+  /** The media family's stage block: the batch's pigeonhole fingerprint
+    * blocks (block-partitioned, appended) plus the 1-row `media_stats`
+    * census (n_payloads, n_blocks) merged onto `prior`'s with exact
+    * long arithmetic — the stats/vec_stats pattern (VERDICT r14 next
+    * #5): doc/media coverage divergence (the q165 lockstep) is a 1-row
+    * read in every describe row instead of a full q165 recompute.
+    * n_payloads counts the stored FINGERPRINT rows (sub-window
+    * payloads never land); n_blocks the physical block rows — exactly
+    * 4 per fingerprint by the pigeonhole construction, so the 4:1
+    * ratio is the integrity invariant a channel/census mismatch would
+    * expose. */
+  private def mediaDelta(s: SparkSession, root: String, printable: DataFrame,
+      prior: Map[String, Channel]): Stage = snap => {
     import s.implicits._
-    Seq((nPayloads, nBlocks)).toDF("n_payloads", "n_blocks")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/$snap/media_stats")
-    maybeCrash("media_stats")
-    Map("media_stats" -> Channel(Seq(s"$snap/media_stats"), "", ""))
+    val (pn, pb) = mediaStatsOf(s, root, prior)
+    val n = printable.count()
+    Seq(stageParquet(Dedup.simBlocks(printable), root, snap,
+        "media_sim_blocks", append = true, partitionBy = "b"),
+      stageParquet(Seq((pn + n, pb + 4 * n)).toDF("n_payloads", "n_blocks")
+        .coalesce(1), root, snap, "media_stats", append = false))
   }
 
   /** The stored media census, BACKFILLED once for a pre-media_stats
@@ -1468,16 +1428,8 @@ object IndexStore {
           "payload shorter than one byte-shingle window) — a channel-less " +
           "store would wedge every later append/screen; initialize with " +
           "at least one fingerprintable payload")
-      val snap = beginSnap(out)
-      val batchN = printable.count()
-      Dedup.simBlocks(printable)
-        .write.mode(SaveMode.Overwrite).partitionBy("b")
-        .parquet(s"$out/$snap/media_sim_blocks")
-      maybeCrash("media_sim_blocks")
-      commitSnap(out, snap, (prior + ("media_sim_blocks" ->
-        Channel(relIfData(out, s"$snap/media_sim_blocks"), "b", "")))
-        .filter(_._2.paths.nonEmpty) ++
-        writeMediaStats(s, out, snap, batchN, 4 * batchN), base)
+      transact(out, base, prior, mediaChannels)(
+        mediaDelta(s, out, printable, Map.empty))
     } finally releaseCheckpoint(printable)
   }
 
@@ -1489,26 +1441,13 @@ object IndexStore {
     // than one shingle window produce no fingerprint and are never
     // stored): a batch id the channel cannot hold must not block its
     // own redelivery, and a batch with nothing storable is a no-op.
-    // Guard read through the transaction's base manifest (single-base
-    // discipline), checkpoint released on every exit.
     val printable = Dedup.simhash60Bytes(batch).localCheckpoint()
     try {
       if (appendGuard("appendMedia", printable, "doc_id",
           channelFrom(s, indexDir, prior, "media_sim_blocks"),
-          fingerprint = Some("sim")).isDefined) {
-        val snap = beginSnap(indexDir)
-        val (pn, pb) = mediaStatsOf(s, indexDir, prior)
-        val batchN = printable.count()
-        Dedup.simBlocks(printable)
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$indexDir/$snap/media_sim_blocks")
-        maybeCrash("media_sim_blocks")
-        commitSnap(indexDir, snap, prior + ("media_sim_blocks" ->
-          prior("media_sim_blocks").copy(paths = prior("media_sim_blocks").paths ++
-            relIfData(indexDir, s"$snap/media_sim_blocks"))) ++
-          writeMediaStats(s, indexDir, snap, pn + batchN, pb + 4 * batchN),
-          base)
-      }
+          fingerprint = Some("sim")).isDefined)
+        transact(indexDir, base, prior)(
+          mediaDelta(s, indexDir, printable, prior))
     } finally releaseCheckpoint(printable)
   }
 
@@ -1574,17 +1513,11 @@ object IndexStore {
   def writeText(s: SparkSession, docs: DataFrame, out: String,
       preTok: Option[DataFrame] = None): Unit = {
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    val chs = writeTextInto(s, docs, out, snap, None, preTok)
-    // an EMPTY doc frame (a streaming bootstrap's first micro-batch
-    // can be empty) must not commit part-file-less parquet paths — a
-    // later read of such a path cannot infer a schema and the store
-    // would be permanently wedged; the stats row (n=0) still commits
-    commitSnap(out, snap, prior -- Seq("postings", "doc_lens", "stats") ++
-      chs.filter { case (n, c) =>
-        n == "stats" || c.paths.exists(p => hasData(s"$out/$p")) },
-      base)
+    transact(out, base, prior, textChannels)(
+      writeTextInto(s, docs, out, Map.empty, preTok))
   }
+
+  private val textChannels = Seq("postings", "doc_lens", "stats")
 
   /** Disjointness guard shared by the append families. Returns true
     * when the append should PROCEED; false when the batch is an EXACT
@@ -1684,39 +1617,22 @@ object IndexStore {
     * (the streaming ingest loop's opening micro-batch). */
   def appendText(s: SparkSession, indexDir: String, batch: DataFrame,
       preTok: Option[DataFrame] = None): Unit = {
+    // ONE base resolution for both arms: the bootstrap commits against
+    // the base this append read, so a rival bootstrap landing meanwhile
+    // is a detected OCC loss, never a silently replaced text family
     val (base, prior) = baseForWrite(indexDir)
-    if (!prior.contains("doc_lens")) writeText(s, batch, indexDir, preTok)
-    // guard + stats read through the transaction's OWN base manifest
-    // (`prior`), not a fresh pointer resolution: a rival committing
-    // between two resolutions would hand this append a torn view that
-    // only commitSnap's OCC check happens to reject — the reads and
-    // the base must be one snapshot by construction, as appendFrom /
-    // screenAndFold already do (and it saves a redundant manifest read)
-    else if (appendGuard("appendText", batch, "doc_id",
-        channelFrom(s, indexDir, prior, "doc_lens")).isDefined) {
-      val st = channelFrom(s, indexDir, prior, "stats").head()
-      val snap = beginSnap(indexDir)
-      val chs = writeTextInto(s, batch, indexDir, snap,
-        Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok)
-      // prior.get, not prior(): a degenerate bootstrap (all-letterless
-      // opening batch) commits doc_lens+stats but drops the data-less
-      // postings channel, and the first real append must CREATE it
-      // rather than crash on the missing key
-      def appended(name: String) = {
-        val fresh = chs(name).paths.flatMap(relIfData(indexDir, _))
-        name -> prior.get(name)
-          .map(ch => ch.copy(paths = ch.paths ++ fresh))
-          .getOrElse(chs(name).copy(paths = fresh))
-      }
-      commitSnap(indexDir, snap,
-        prior ++ Seq(appended("postings"), appended("doc_lens"))
-          .filter(_._2.paths.nonEmpty).toMap +
-          ("stats" -> chs("stats")), base)
-    }
+    val bootstrap = !prior.contains("doc_lens")
+    if (bootstrap || appendGuard("appendText", batch, "doc_id",
+        channelFrom(s, indexDir, prior, "doc_lens")).isDefined)
+      transact(indexDir, base, prior, if (bootstrap) textChannels else Nil)(
+        writeTextInto(s, batch, indexDir,
+          if (bootstrap) Map.empty else prior, preTok))
   }
 
-  /** Stage the three text channels of one doc frame into `snap`;
-    * returns their (single-path) channel entries. One tokenization
+  /** The text family's stage block: the three text channels of one
+    * doc frame — postings and doc_lens appended, the 1-row `stats`
+    * census (n_docs, sum_dl) merged onto `prior`'s with exact long
+    * arithmetic (a store with no stats starts from zero). One tokenization
     * pass feeds all three (the postings plan re-tokenizes the corpus
     * per consumer otherwise — a measured double scan at store-write
     * time). `doc_lens` is ID-COMPLETE over the input docs (a
@@ -1738,8 +1654,8 @@ object IndexStore {
     * — a stale or foreign frame silently corrupts the postings; the
     * route equivalence is spec-pinned (TextIndexSpec). */
   private def writeTextInto(s: SparkSession, docs: DataFrame,
-      root: String, snap: String, priorStats: Option[(Long, Long)],
-      preTok: Option[DataFrame] = None): Map[String, Channel] = {
+      root: String, prior: Map[String, Channel],
+      preTok: Option[DataFrame]): Stage = snap => {
     val postings = preTok
       .map(_.join(docs.select(col("doc_id")), Seq("doc_id"), "left_semi"))
       .getOrElse(TextOps.postingsFor(docs))
@@ -1775,38 +1691,30 @@ object IndexStore {
     try {
       // the heavy range-sorted postings write overlaps the small
       // doc_lens + stats chain (both branches read only the two
-      // persisted frames above; guide §2.6 — the r16 staging
-      // discipline). The commit stays with the caller, after both.
+      // persisted frames above; guide §2.6)
       stageConcurrently(
+        () => Seq(stageParquet(postings.join(docLens, Seq("doc_id"))
+          .repartitionByRange(col("term"), col("doc_id"))
+          .sortWithinPartitions(col("term"), col("doc_id")),
+          root, snap, "postings", append = true, sort = "term,doc_id")),
         () => {
-          postings.join(docLens, Seq("doc_id"))
-            .repartitionByRange(col("term"), col("doc_id"))
-            .sortWithinPartitions(col("term"), col("doc_id"))
-            .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/postings")
-          maybeCrash("postings")
-        },
-        () => {
-          docLens.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/doc_lens")
-          maybeCrash("doc_lens")
-          // stats channel: exact long merge (prior + batch) — the 1-row
-          // collect is the whole cross-channel coupling. Only INDEXED docs
-          // (dl > 0) enter the census: the id-complete dl=0 rows exist for
-          // the membership guard, not for BM25's N/avgdl
+          val dl = stageParquet(docLens, root, snap, "doc_lens", append = true)
+          // stats channel: the 1-row collect is the whole cross-channel
+          // coupling. Only INDEXED docs (dl > 0) enter the census: the
+          // id-complete dl=0 rows exist for the membership guard, not
+          // for BM25's N/avgdl
           val b = docLens.filter(col("dl") > 0)
             .agg(count(lit(1)).as("n"), sum(col("dl")).as("sd")).head()
-          val (bn, bsd) = (b.getLong(0), if (b.isNullAt(1)) 0L else b.getLong(1))
-          val (n, sd) = priorStats match {
-            case Some((pn, psd)) => (pn + bn, psd + bsd)
-            case None => (bn, bsd)
+          val (pn, psd) = prior.get("stats").fold((0L, 0L)) { _ =>
+            val st = channelFrom(s, root, prior, "stats").head()
+            (st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))
           }
           import s.implicits._
-          Seq((n, sd)).toDF("n_docs", "sum_dl")
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/stats")
-        })
-      Map(
-        "postings" -> Channel(Seq(s"$snap/postings"), "", "term,doc_id"),
-        "doc_lens" -> Channel(Seq(s"$snap/doc_lens"), "", ""),
-        "stats" -> Channel(Seq(s"$snap/stats"), "", ""))
+          Seq(dl, stageParquet(Seq((pn + b.getLong(0),
+              psd + (if (b.isNullAt(1)) 0L else b.getLong(1))))
+            .toDF("n_docs", "sum_dl").coalesce(1), root, snap, "stats",
+            append = false))
+        }).flatten
     } finally {
       // BLOCKING unpersist: the async default returns while tens of GB
       // of cached posting blocks still drain, and that churn taxed the
@@ -1891,7 +1799,7 @@ object IndexStore {
   private def bm25BatchFrom(s: SparkSession, indexDir: String,
       m: Map[String, Channel], qframe: DataFrame, k: Int,
       exclude: Option[DataFrame],
-      terms: Option[Seq[String]] = None): DataFrame = {
+      terms: Option[Seq[String]]): DataFrame = {
     import s.implicits._
     // the union of all queries' terms drives ONE pruned postings read;
     // the batch is driver data by nature, so callers that already hold
@@ -1959,44 +1867,54 @@ object IndexStore {
         "store would wedge every later append/lookup; train and write a " +
         "non-empty model")
     val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    // the three independent pieces (tiny centroids table, the heavy
-    // cid-partitioned cells staging, the counts feeding the 1-row
-    // census) overlap on the scheduler (r16 staging discipline)
-    var statsChs: Map[String, Channel] = null
-    stageConcurrently(
-      () => {
-        centroids.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/centroids")
-        maybeCrash("centroids")
-      },
-      () => {
-        stageCells(assignCells(vectors, centroids), s"$out/$snap/cells")
-        maybeCrash("cells")
-      },
-      () => {
-        val n = vectors.count()
-        statsChs = writeVecStats(s, out, snap, n, centroids.count(), n)
-      })
-    commitSnap(out, snap, prior -- Seq("centroids", "cells", "vec_stats") ++ (Map(
-      "centroids" -> Channel(relIfData(out, s"$snap/centroids"), "", ""),
-      "cells" -> Channel(relIfData(out, s"$snap/cells"), "cid", ""))
-      .filter(_._2.paths.nonEmpty)) ++ statsChs, base)
+    transact(out, base, prior, vecChannels)(
+      vectorDelta(s, out, vectors, centroids, Map.empty, vectors.count()): _*)
   }
 
-  /** Stage the vector family's 1-row census (`vec_stats`: n_vecs, k,
-    * n_at_train) into `snap` — the stored state [[retrainIfDrifted]]'s
-    * growth check reads (the text family's `stats` pattern): n_vecs is
-    * merge-updated per append with exact long arithmetic; k and
-    * n_at_train are fixed by the last train, so "has the corpus
-    * outgrown the model" is a 1-row read, never a corpus count at
-    * gate time. */
-  private def writeVecStats(s: SparkSession, root: String, snap: String,
-      nVecs: Long, k: Long, nAtTrain: Long): Map[String, Channel] = {
+  private val vecChannels = Seq("centroids", "cells", "vec_stats")
+
+  /** The vector family's stage blocks: `vectors` assigned under `cents`
+    * into cid-partitioned cells (appended), and the 1-row `vec_stats`
+    * census (n_vecs, k, n_at_train) — the stored state
+    * [[retrainIfDrifted]]'s growth check reads (the text family's
+    * `stats` pattern). Onto a store with no cells (a write, a retrain)
+    * the model itself is staged and k, n_at_train are fixed by this
+    * train; a fold merges n_vecs onto `prior`'s with exact long
+    * arithmetic over the guard's `batchN`, so "has the corpus outgrown
+    * the model" is a 1-row read, never a corpus count at gate time. */
+  private def vectorDelta(s: SparkSession, root: String, vectors: DataFrame,
+      cents: DataFrame, prior: Map[String, Channel],
+      batchN: => Long): Seq[Stage] = {
     import s.implicits._
-    Seq((nVecs, k, nAtTrain)).toDF("n_vecs", "k", "n_at_train")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/vec_stats")
-    Map("vec_stats" -> Channel(Seq(s"$snap/vec_stats"), "", ""))
+    val fresh = !prior.contains("cells")
+    val cells: Stage = snap =>
+      Seq(stageCells(assignCells(vectors, cents), root, snap))
+    val stats: Stage = snap => {
+      val n = batchN
+      val (vn, k, nt) =
+        if (fresh) (n, cents.count(), n)
+        else { val (pn, pk, pt) = vecStatsOf(s, root, prior); (pn + n, pk, pt) }
+      Seq(stageParquet(Seq((vn, k, nt)).toDF("n_vecs", "k", "n_at_train")
+        .coalesce(1), root, snap, "vec_stats", append = false))
+    }
+    if (!fresh) Seq(cells, stats)
+    else Seq(snap => Seq(stageParquet(cents, root, snap, "centroids",
+      append = false)), cells, stats)
   }
+
+  /** The stored vector census, BACKFILLED once for a pre-vec_stats
+    * store from the channels themselves. */
+  private def vecStatsOf(s: SparkSession, root: String,
+      prior: Map[String, Channel]): (Long, Long, Long) =
+    prior.get("vec_stats") match {
+      case Some(_) =>
+        val st = channelFrom(s, root, prior, "vec_stats").head()
+        (st.getAs[Long]("n_vecs"), st.getAs[Long]("k"),
+          st.getAs[Long]("n_at_train"))
+      case None =>
+        val n0 = channelFrom(s, root, prior, "cells").count()
+        (n0, channelFrom(s, root, prior, "centroids").count(), n0)
+    }
 
   /** O(batch) append: assign under the stored centroids, stage into
     * the same cid-partitioned layout. Batch vec_ids must be disjoint
@@ -2036,60 +1954,28 @@ object IndexStore {
         "on the IVF arm and silently omit them from the projected arm. " +
         "Pass raw = Some((vec_id, label, embedding) rows of this batch) " +
         "so both arms advance in one snapshot transaction")
-    // guard + centroid reads through the transaction's base manifest
-    // (same single-base discipline as appendText)
     appendGuard("appendVectors", batch, "vec_id",
         channelFrom(s, indexDir, prior, "cells")).foreach { batchN =>
-      val cents = channelFrom(s, indexDir, prior, "centroids")
-      val snap = beginSnap(indexDir)
-      // cells delta, projected deltas and the 1-row census read are
-      // independent (each reads only the caller-held `prior` capture
-      // and writes only its own staging subdirectory) — overlap them
-      // (r16 staging discipline); the commit stays single and last
-      var statsTriple: (Long, Long, Long) = null
-      var projChs: Option[Map[String, Channel]] = None
-      stageConcurrently(
-        () => {
-          stageCells(assignCells(batch, cents), s"$indexDir/$snap/cells")
-          maybeCrash("cells")
-        },
-        // vec_stats merge: exact long arithmetic over the guard's count
-        // (a pre-vec_stats store backfills its census once, from the
-        // channels this transaction already resolved)
-        () => statsTriple = prior.get("vec_stats") match {
-          case Some(_) =>
-            val st = channelFrom(s, indexDir, prior, "vec_stats").head()
-            (st.getAs[Long]("n_vecs"), st.getAs[Long]("k"),
-              st.getAs[Long]("n_at_train"))
-          case None =>
-            val n0 = channelFrom(s, indexDir, prior, "cells").count()
-            (n0, channelFrom(s, indexDir, prior, "centroids").count(), n0)
-        },
-        () => projChs = raw.map(r =>
-          appendProjectionsInto(s, indexDir, "appendVectors", prior, snap,
-            batch, r)))
-      val (pn, pk, pt) = statsTriple
-      commitSnap(indexDir, snap, prior + ("cells" ->
-        prior("cells").copy(paths =
-          prior("cells").paths ++ relIfData(indexDir, s"$snap/cells"))) ++
-        writeVecStats(s, indexDir, snap, pn + batchN, pk, pt) ++
-        projChs.getOrElse(Map.empty), base)
+      transact(indexDir, base, prior)(
+        vectorDelta(s, indexDir, batch,
+          channelFrom(s, indexDir, prior, "centroids"), prior, batchN) ++
+          raw.map(projAppendDelta(s, indexDir, "appendVectors", prior,
+            batch, _)): _*)
     }
   }
 
-  /** Stage the projected-channel deltas of an append batch into
-    * `snap` (the transaction [[appendVectors]] or [[appendUnified]]
-    * commits — `op` names the caller in refusals): verify the
-    * raw frame IS the batch (same vec_id set — a skewed pairing would
-    * commit cells for one corpus and projections for another), verify
-    * this build derives the STORED sign table (the
-    * [[projectedAnnFromStore]] identity gate, applied at write time —
-    * extending a foreign derivation would mix two coarse geometries in
-    * one channel), project with the stored (k), and return the
-    * appended channel entries + merged proj_stats. */
-  private def appendProjectionsInto(s: SparkSession, indexDir: String,
-      op: String, prior: Map[String, Channel], snap: String,
-      batch: DataFrame, raw: DataFrame): Map[String, Channel] = {
+  /** The projected family's stage block for an append batch (the
+    * transaction [[appendVectors]] or [[appendUnified]] commits — `op`
+    * names the caller in refusals): verify the raw frame IS the batch
+    * (same vec_id set — a skewed pairing would commit cells for one
+    * corpus and projections for another), verify this build derives
+    * the STORED sign table (the [[projectedAnnFromStore]] identity
+    * gate, applied at write time — extending a foreign derivation
+    * would mix two coarse geometries in one channel), then stage
+    * [[projDelta]] with the stored (k) and the merged coverage. */
+  private def projAppendDelta(s: SparkSession, indexDir: String,
+      op: String, prior: Map[String, Channel], batch: DataFrame,
+      raw: DataFrame): Stage = snap => {
     val mism = batch.select(col("vec_id"))
       .unionByName(raw.select(col("vec_id")))
       .groupBy(col("vec_id")).count()
@@ -2117,16 +2003,7 @@ object IndexStore {
     require(bk == pk && bd == pd,
       s"$op: batch projects to (k=$bk, d=$bd) but the store's " +
         s"identity is (k=$pk, d=$pd) — embedding width changed mid-corpus")
-    units.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/proj_units")
-    maybeCrash("proj_units")
-    fine.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/exact_vecs")
-    maybeCrash("exact_vecs")
-    def appended(name: String) = {
-      val fresh = relIfData(indexDir, s"$snap/$name")
-      name -> prior(name).copy(paths = prior(name).paths ++ fresh)
-    }
-    Map(appended("proj_units"), appended("exact_vecs")) ++
-      writeProjStats(s, indexDir, snap, pk, pd, pn + fineN)
+    projDelta(s, indexDir, units, Some(fine), (pk, pd, pn + fineN))(snap)
   }
 
   /** Refresh the store's IVF model from its own cells — the
@@ -2158,19 +2035,9 @@ object IndexStore {
       // lloydTrain returns an already-checkpointed model frame — no
       // second checkpoint here, just ownership of the release
       val cents = Similarity.lloydTrain(stored.select(col("vec_id"), col("unit")))
-      try {
-        val snap = beginSnap(indexDir)
-        cents.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$snap/centroids")
-        maybeCrash("centroids")
-        stageCells(assignCells(stored, cents), s"$indexDir/$snap/cells")
-        maybeCrash("cells")
-        commitSnap(indexDir, snap, prior -- Seq("centroids", "cells", "vec_stats") ++ Map(
-          "centroids" -> Channel(Seq(s"$snap/centroids"), "", ""),
-          "cells" -> Channel(Seq(s"$snap/cells"), "cid", "")) ++ locally {
-            val n = stored.count()
-            writeVecStats(s, indexDir, snap, n, cents.count(), n)
-          }, base)
-      } finally releaseCheckpoint(cents)
+      try transact(indexDir, base, prior, vecChannels)(
+        vectorDelta(s, indexDir, stored, cents, Map.empty, stored.count()): _*)
+      finally releaseCheckpoint(cents)
     } finally releaseCheckpoint(stored)
   }
 
@@ -2228,20 +2095,20 @@ object IndexStore {
     * results). */
   def compact(s: SparkSession, root: String): Unit = {
     val (base, prior) = baseRequired(root)
-    val snap = beginSnap(root)
-    commitSnap(root, snap, rewriteChannelsInto(s, root, prior, root, snap), base)
+    transact(root, base, prior)(rewriteChannelsInto(s, root, prior, root, _))
   }
 
   /** Rewrite every channel of manifest `m` (resolved against
     * `srcRoot`) into `destRoot/destSnap`, restoring each channel's
-    * contract layout at ~[[compactTargetBytes]] files; returns the
-    * staged single-path channel map. Shared by [[compact]] (srcRoot ==
+    * contract layout at ~[[compactTargetBytes]] files, one channel
+    * after another; returns the staged single-path entries, each
+    * replacing its channel. Shared by [[compact]] (srcRoot ==
     * destRoot: collapse append fragmentation in place) and
     * [[cloneStoreAt]] (a fresh root: publish a version). */
   private def rewriteChannelsInto(s: SparkSession, srcRoot: String,
       m: Map[String, Channel], destRoot: String,
-      destSnap: String): Map[String, Channel] =
-    m.map { case (name, ch) =>
+      destSnap: String): Seq[Staged] =
+    m.toSeq.map { case (name, ch) =>
       if (name == "bloom") {
         // the blob is a single file — carry its bytes into the new
         // snapshot so the old one becomes fully unreferenced. The
@@ -2252,8 +2119,8 @@ object IndexStore {
         val blobName = Paths.get(ch.paths.head).getFileName.toString
         new java.io.File(s"$destRoot/$destSnap/bloom").mkdirs()
         Files.write(Paths.get(s"$destRoot/$destSnap/bloom/$blobName"), bytes)
-        maybeCrash(name)
-        name -> ch.copy(paths = Seq(s"$destSnap/bloom/$blobName"))
+        Staged(name, ch.copy(paths = Seq(s"$destSnap/bloom/$blobName")),
+          append = false)
       } else {
         val df = channelFrom(s, srcRoot, m, name)
         val bytes = ch.paths.map(p => dirBytes(new java.io.File(s"$srcRoot/$p"))).sum
@@ -2276,11 +2143,8 @@ object IndexStore {
               df.columns.filterNot(_ == ch.partitionBy).map(col).toSeq
             df.repartitionByRange(parts, keys: _*)
           } else df.repartition(parts)
-        val w = shaped.write.mode(SaveMode.Overwrite)
-        (if (ch.partitionBy.nonEmpty) w.partitionBy(ch.partitionBy) else w)
-          .parquet(s"$destRoot/$destSnap/$name")
-        maybeCrash(name)
-        name -> ch.copy(paths = Seq(s"$destSnap/$name"))
+        stageParquet(shaped, destRoot, destSnap, name, append = false,
+          ch.partitionBy, ch.sort)
       }
     }
 
@@ -2301,9 +2165,7 @@ object IndexStore {
     require(currentSnapOpt(dest).isEmpty,
       s"cloneStoreAt: $dest is already an index store — a publish " +
         "target is born, not replaced; clone into a fresh root")
-    val destSnap = beginSnap(dest)
-    commitSnap(dest, destSnap,
-      rewriteChannelsInto(s, root, m, dest, destSnap), None)
+    transact(dest, None, Map.empty)(rewriteChannelsInto(s, root, m, dest, _))
   }
 
   /** Delete snapshot directories unreachable from the last `retain`
@@ -2505,8 +2367,8 @@ object IndexStore {
       .select(col("vec_id"), col("label"), col("unit"), col("cid"))
   }
 
-  /** Stage an assigned-cells frame into `dest` in the channel's
-    * contract layout. The frame arrives hash-distributed by vec_id
+  /** Stage an assigned-cells frame as the `cells` channel of `snap` in
+    * its contract layout. The frame arrives hash-distributed by vec_id
     * (nearestCell's agg + join-back), so a bare `partitionBy("cid")`
     * write emits one file per (writing task × touched cell) — at the
     * 100× probe a 20k-row DELTA landed ~9k small files, growing the
@@ -2528,11 +2390,11 @@ object IndexStore {
     * (MEMORY_AND_DISK, spilling for corpus-sized bootstraps — the same
     * order of I/O as the exchange it feeds), and is released on every
     * exit. */
-  private def stageCells(assigned: DataFrame, dest: String): Unit = {
+  private def stageCells(assigned: DataFrame, root: String,
+      snap: String): Staged = {
     val a = assigned.localCheckpoint()
-    try a.repartitionByRange(col("cid"), col("vec_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid")
-      .parquet(dest)
+    try stageParquet(a.repartitionByRange(col("cid"), col("vec_id")), root,
+      snap, "cells", append = true, partitionBy = "cid")
     finally releaseCheckpoint(a)
   }
 
@@ -2716,11 +2578,6 @@ object IndexStore {
       "writeUnified: empty docs, vectors or centroids — a channel-less " +
         "unified store would wedge later folds; bootstrap with a " +
         "non-empty corpus slice and a trained model")
-    // every cheap refusal fires BEFORE any staging thread launches
-    // (review r14): a require left inside a block would race the other
-    // families' staging and make refusal precedence a thread race —
-    // the sequential code refused earlier, and the fix is to refuse
-    // earlier still (one small isEmpty job per optional family)
     proj.foreach { case (units, fineVecs) =>
       require(!units.isEmpty && !fineVecs.isEmpty,
         "writeUnified: empty projected-units or exact-vectors frame — " +
@@ -2730,15 +2587,9 @@ object IndexStore {
     val projIdentity = proj.map { case (units, fineVecs) =>
       projIdentityOf("writeUnified", units, fineVecs)
     }
-    // the remaining two DETERMINISTIC refusals, hoisted ahead of the
-    // concurrent staging like the rest (ADVICE r15): under
-    // first-failure-to-complete semantics a require left inside a
-    // staged block makes refusal precedence a thread race. The census
-    // COLUMN check is free (schema-only — censusRequired itself runs
-    // again inside the census block on the same frame); the media
-    // fingerprintability check computes the checkpointed fingerprints
-    // the staging block then reuses, so the hoist costs nothing extra.
-    if (governed) censusRequired("writeUnified", docs)
+    val census = Option.when(governed)(censusRequired("writeUnified", docs))
+    // the media fingerprintability check computes the checkpointed
+    // fingerprints the staging block then reuses
     val mediaPrintable = payloads.map { p =>
       val printable = Dedup.simhash60Bytes(p).localCheckpoint()
       require(!printable.isEmpty,
@@ -2749,70 +2600,6 @@ object IndexStore {
           "or omit the payloads side")
       printable
     }
-    try {
-    val (base, prior) = baseForWrite(out)
-    val snap = beginSnap(out)
-    // the independent channel families stage CONCURRENTLY into their
-    // own subdirectories of the one snapshot (VERDICT r13 next #4 —
-    // see [[stageConcurrently]]); the commit below stays single + last
-    var tchs: Map[String, Channel] = null
-    var censusRel: Option[(String, Channel)] = None
-    var projChs: Option[Map[String, Channel]] = None
-    var mediaChs: Option[Map[String, Channel]] = None
-    var n = 0L
-    stageConcurrently(
-      () => tchs = writeTextInto(s, docs, out, snap, None, preTok),
-      () => {
-        centroids.write.mode(SaveMode.Overwrite)
-          .parquet(s"$out/$snap/centroids")
-        maybeCrash("centroids")
-      },
-      () => {
-        stageCells(assignCells(vectors, centroids), s"$out/$snap/cells")
-        maybeCrash("cells")
-      },
-      () => censusRel = if (governed) Some {
-        val c = censusRequired("writeUnified", docs)
-        c.write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/mix_census")
-        maybeCrash("mix_census")
-        "mix_census" -> Channel(relIfData(out, s"$snap/mix_census"), "", "")
-      } else None,
-      // optional projected-channel bootstrap: the serving pair lands in
-      // the SAME commit as the families it must cover, so no version
-      // ever exists where the IVF arm serves and the projected arm is
-      // absent-then-backfilled (and the version axis the q157 oracle
-      // replays stays the ingest timeline, not a channel-add commit)
-      () => projChs = proj.map { case (units, fineVecs) =>
-        val (k, d, fineN) = projIdentity.get
-        units.select(col("vec_id"), col("label"), col("punit"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/proj_units")
-        maybeCrash("proj_units")
-        fineVecs.select(col("vec_id"), col("embd"), col("nsq"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$out/$snap/exact_vecs")
-        maybeCrash("exact_vecs")
-        Map(
-          "proj_units" -> Channel(relIfData(out, s"$snap/proj_units"), "", ""),
-          "exact_vecs" -> Channel(relIfData(out, s"$snap/exact_vecs"), "", ""))
-          .filter(_._2.paths.nonEmpty) ++
-          writeProjStats(s, out, snap, k, d, fineN)
-      },
-      // media-family bootstrap: the payload fingerprints land in the SAME
-      // commit as the text and vector families (the [[writeMedia]]
-      // staging, unified id space); the all-unfingerprintable refusal
-      // fired at the top with the other deterministic refusals, and
-      // this block reuses its checkpointed fingerprints
-      () => mediaChs = mediaPrintable.map { printable =>
-        val batchN = printable.count()
-        Dedup.simBlocks(printable)
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$out/$snap/media_sim_blocks")
-        maybeCrash("media_sim_blocks")
-        Map("media_sim_blocks" ->
-          Channel(relIfData(out, s"$snap/media_sim_blocks"), "b", ""))
-          .filter(_._2.paths.nonEmpty) ++
-          writeMediaStats(s, out, snap, batchN, 4 * batchN)
-      },
-      () => n = vectors.count())
     // the proj-family channels are ALWAYS dropped from the prior on a
     // full rewrite, proj passed or not (ADVICE r11): they describe the
     // corpus being replaced, and carrying them forward under proj=None
@@ -2821,23 +2608,19 @@ object IndexStore {
     // corpus on the projected arm. A proj=None rewrite leaves a store
     // with no projected route — loud at read time (projectedAnnFromStore
     // refuses a proj_stats-less store by name); re-run writeProjections
-    // or pass proj to restore it.
-    commitSnap(out, snap,
-      prior -- Seq("postings", "doc_lens", "stats",
-        "centroids", "cells", "vec_stats", "mix_census",
-        "proj_units", "exact_vecs", "proj_stats",
-        "media_sim_blocks", "media_stats") ++
-        tchs.filter { case (nm, c) =>
-          nm == "stats" || c.paths.exists(p => hasData(s"$out/$p")) } ++
-        Map(
-          "centroids" -> Channel(relIfData(out, s"$snap/centroids"), "", ""),
-          "cells" -> Channel(relIfData(out, s"$snap/cells"), "cid", ""))
-          .filter(_._2.paths.nonEmpty) ++
-        censusRel.filter(_._2.paths.nonEmpty) ++
-        writeVecStats(s, out, snap, n, centroids.count(), n) ++
-        projChs.getOrElse(Map.empty) ++
-        mediaChs.getOrElse(Map.empty),
-      base)
+    // or pass proj to restore it. The optional proj and media families
+    // land in the SAME commit as the families they must cover, so no
+    // version ever serves one arm without the other.
+    try {
+      val (base, prior) = baseForWrite(out)
+      transact(out, base, prior, textChannels ++ vecChannels ++
+          Seq("mix_census") ++ projChannels ++ mediaChannels)(
+        writeTextInto(s, docs, out, Map.empty, preTok) +:
+          (vectorDelta(s, out, vectors, centroids, Map.empty, vectors.count()) ++
+            census.map(censusDelta(out, _)) ++
+            proj.zip(projIdentity).map { case ((units, fineVecs), id) =>
+              projDelta(s, out, units, Some(fineVecs), id) } ++
+            mediaPrintable.map(mediaDelta(s, out, _, Map.empty))): _*)
     } finally mediaPrintable.foreach(releaseCheckpoint)
   }
 
@@ -2901,10 +2684,8 @@ object IndexStore {
     * [[screenAndFoldGated]] single-base discipline). */
   private def appendUnifiedFrom(s: SparkSession, root: String,
       base: Option[String], prior: Map[String, Channel],
-      docs: DataFrame, vectors: DataFrame,
-      raw: Option[DataFrame] = None,
-      payloads: Option[DataFrame] = None,
-      preTok: Option[DataFrame] = None,
+      docs: DataFrame, vectors: DataFrame, raw: Option[DataFrame],
+      payloads: Option[DataFrame], preTok: Option[DataFrame],
       preCensus: Option[DataFrame] = None): Unit = {
     // the two emptiness probes are independent small jobs — overlap
     // them (probeConcurrently keeps any failure in declaration order)
@@ -2987,96 +2768,26 @@ object IndexStore {
         "payloads alone")
     if (textGo.isEmpty && vecGo.isEmpty && mediaGo.isEmpty)
       return // exact replay of every family: skip
-    val snap = beginSnap(root)
-    // the family deltas stage CONCURRENTLY into the one snapshot
-    // (VERDICT r13 next #4 — see [[stageConcurrently]]); every block
-    // reads only the caller-held `prior` capture and writes only its
-    // own subdirectory, and the pair-atomic commit below stays last
-    var tchs: Option[Map[String, Channel]] = None
-    var census: Option[DataFrame] = None
-    var vchs: Option[Map[String, Channel]] = None
-    var projChs: Option[Map[String, Channel]] = None
-    var mediaChs: Option[Map[String, Channel]] = None
-    stageConcurrently(
-      () => tchs = textGo.map { _ =>
-        val st = channelFrom(s, root, prior, "stats").head()
-        writeTextInto(s, docs, root, snap,
-          Some((st.getAs[Long]("n_docs"), st.getAs[Long]("sum_dl"))), preTok)
-      },
-      // a governed unified store extends its census on every DOCS-side
-      // fold (same additive-delta contract as the dedup family's append);
-      // a vectors-only catch-up leaves the doc-mix timeline untouched
-      // (format-guarded at the top of appendUnifiedFrom, before staging).
-      // `preCensus` (VERDICT r14 next #2): the GATED path already paid
-      // this batch's census explode for its verdict — the fold writes
-      // that checkpointed ~O(sources × 71)-row bins frame instead of
-      // exploding the batch a second time (bins are per-source
-      // additive, so gate-bins-minus-held ≡ censusBins(admitted)
-      // bit-identically; the unified fold does not screen, which is
-      // what makes the reuse safe — the dedup family's screen makes
-      // kept ≠ admitted, so IT still censuses its own kept frame)
-      () => census =
-        if (prior.contains("mix_census") && textGo.isDefined) Some {
-          val c = preCensus.getOrElse(censusRequired("appendUnified", docs))
-          c.write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/mix_census")
-          maybeCrash("mix_census")
-          c
-        } else None,
-      () => vchs = vecGo.map { batchN =>
-        val cents = channelFrom(s, root, prior, "centroids")
-        stageCells(assignCells(vectors, cents), s"$root/$snap/cells")
-        maybeCrash("cells")
-        val st = channelFrom(s, root, prior, "vec_stats").head()
-        writeVecStats(s, root, snap, st.getAs[Long]("n_vecs") + batchN,
-          st.getAs[Long]("k"), st.getAs[Long]("n_at_train")) +
-          ("cells" -> Channel(Seq(s"$snap/cells"), "cid", ""))
-      },
-      // projected-channel deltas ride the SAME pair-atomic commit (the
-      // appendVectors maintenance contract on the single-pointer store);
-      // a vector-side exact replay skips them with the cells delta —
-      // the store already covers those vectors
-      () => projChs = (vecGo, raw) match {
-        case (Some(_), Some(r)) => Some(appendProjectionsInto(
-          s, root, "appendUnified", prior, snap, vectors, r))
-        case _ => None
-      },
-      // media fingerprint blocks ride the SAME commit (third family);
-      // an exact media replay skips with the other deltas
-      () => mediaChs = mediaGo.map { _ =>
-        val (pn, pb) = mediaStatsOf(s, root, prior)
-        val batchN = mediaPrintable.get.count()
-        Dedup.simBlocks(mediaPrintable.get)
-          .write.mode(SaveMode.Overwrite).partitionBy("b")
-          .parquet(s"$root/$snap/media_sim_blocks")
-        maybeCrash("media_sim_blocks")
-        Map("media_sim_blocks" ->
-          Channel(Seq(s"$snap/media_sim_blocks"), "b", "")) ++
-          writeMediaStats(s, root, snap, pn + batchN, pb + 4 * batchN)
-      })
-    def appended(name: String, chs: Map[String, Channel]) = {
-      val fresh = chs(name).paths.flatMap(p => relIfData(root, p))
-      name -> prior.get(name)
-        .map(ch => ch.copy(paths = ch.paths ++ fresh))
-        .getOrElse(chs(name).copy(paths = fresh))
-    }
-    commitSnap(root, snap, prior ++
-      tchs.toSeq.flatMap(c =>
-        Seq(appended("postings", c), appended("doc_lens", c))
-          .filter(_._2.paths.nonEmpty) :+ ("stats" -> c("stats"))) ++
-      vchs.toSeq.flatMap(c =>
-        Seq(appended("cells", c)).filter(_._2.paths.nonEmpty) :+
-          ("vec_stats" -> c("vec_stats"))) ++
-      census.map { _ =>
-        val fresh = relIfData(root, s"$snap/mix_census")
-        "mix_census" -> prior.get("mix_census")
-          .map(ch => ch.copy(paths = ch.paths ++ fresh))
-          .getOrElse(Channel(fresh, "", ""))
-      }.filter(_._2.paths.nonEmpty) ++
-      projChs.getOrElse(Map.empty) ++
-      mediaChs.toSeq.flatMap(c =>
-        Seq(appended("media_sim_blocks", c)).filter(_._2.paths.nonEmpty) :+
-          ("media_stats" -> c("media_stats"))),
-      base)
+    // a governed unified store extends its census on every DOCS-side
+    // fold; a vectors-only catch-up leaves the doc-mix timeline
+    // untouched. `preCensus` (VERDICT r14 next #2): the GATED path
+    // already paid this batch's census explode for its verdict — the
+    // fold writes that checkpointed ~O(sources × 71)-row bins frame
+    // instead of exploding the batch a second time (bins are
+    // per-source additive, so gate-bins-minus-held ≡
+    // censusBins(admitted) bit-identically; the unified fold does not
+    // screen, which is what makes the reuse safe). A vector-side exact
+    // replay skips the projected deltas with the cells delta.
+    val census = textGo.filter(_ => prior.contains("mix_census")).map(_ =>
+      preCensus.getOrElse(censusRequired("appendUnified", docs)))
+    transact(root, base, prior)(
+      textGo.map(_ => writeTextInto(s, docs, root, prior, preTok)).toSeq ++
+        census.map(censusDelta(root, _)) ++
+        vecGo.toSeq.flatMap(n => vectorDelta(s, root, vectors,
+          channelFrom(s, root, prior, "centroids"), prior, n)) ++
+        vecGo.flatMap(_ => raw).map(projAppendDelta(s, root,
+          "appendUnified", prior, vectors, _)) ++
+        mediaGo.map(_ => mediaDelta(s, root, mediaPrintable.get, prior)): _*)
     } finally mediaPrintable.foreach(releaseCheckpoint)
   }
 
@@ -3125,7 +2836,6 @@ object IndexStore {
       payloads: Option[DataFrame] = None,
       preTok: Option[DataFrame] = None, orderGate: Boolean = false,
       maxOrderPsi: Double = 0.25): DataFrame = {
-    import s.implicits._
     val (base, prior) = baseRequired(root)
     // CALLER mispairing checked against the caller's ORIGINAL frames,
     // before the breaker touches anything (ADVICE r11): a raw side
@@ -3144,77 +2854,62 @@ object IndexStore {
       "appendUnifiedGated: this unified store carries no mix_census " +
         "channel — the drift gate has no stored anchor distribution to " +
         "hold against; bootstrap with writeUnified(..., governed = true)")
-    // the two orphan gates, the census explode and the gate's PSI read
-    // below are independent read-only probes — they overlap on the
-    // scheduler (probeConcurrently), with refusal precedence pinned to
-    // this declaration order: vector orphans, payload orphans, census.
-    // orphan gate: every batch vector's doc is in-batch (gated with
-    // this tick) or already stored (gated when it folded) — one
-    // O(batch) anti-join against the batch ids plus one against the
-    // pruned doc_lens id column
-    val vecOrphanGate: () => Unit = () => if (!vEmptyCaller) {
-      val orphans = vectors.select(col("vec_id"))
-        .join(docs.select(col("doc_id").as("vec_id")), Seq("vec_id"),
-          "left_anti")
-        .join(channelFrom(s, root, prior, "doc_lens")
-          .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti")
-        .count()
-      require(orphans == 0,
-        s"appendUnifiedGated: $orphans batch vector(s) have no doc in " +
-          "this batch and none stored — a vectors-LEADING fold would " +
-          "carry their source past the drift breaker ungated (vectors " +
-          "have no source column) and leave the pair inconsistent if " +
-          "their docs are later held. Fold docs first (or in the same " +
-          "pair); the one-sided vectors catch-up is legal only for docs " +
-          "already folded through this gate")
-    }
-    // the media sibling of the orphan gate: every payload's doc is
+    // the orphan gates: every batch vector's (and payload's) doc is
     // in-batch (gated with this tick) or already stored (gated when it
-    // folded) — payloads carry no source column either
-    val payloadOrphanGate: () => Unit = () =>
-      payloads.filter(!_.isEmpty).foreach { p =>
-      val orphans = p.select(col("doc_id"))
-        .join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .join(channelFrom(s, root, prior, "doc_lens")
-          .select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .count()
-      require(orphans == 0,
-        s"appendUnifiedGated: $orphans batch payload(s) have no doc in " +
-          "this batch and none stored — a media-LEADING fold would " +
-          "carry their source's fingerprints past the drift breaker " +
-          "ungated (payloads have no source column). Fold docs first " +
-          "(or in the same tick); the media-only catch-up is legal " +
-          "only for docs already folded through this gate")
-    }
+    // folded) — one O(batch) anti-join against the batch ids plus one
+    // against the pruned doc_lens id column. Vectors and payloads carry
+    // no source column, so a LEADING fold would carry its source past
+    // the breaker ungated.
+    def orphans(ids: DataFrame): Long = ids
+      .join(docs.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      .join(channelFrom(s, root, prior, "doc_lens").select(col("doc_id")),
+        Seq("doc_id"), "left_anti")
+      .count()
     // ONE census explode for the whole gated fold (VERDICT r14 next
     // #2): the gate's verdict and the fold's mix_census delta both
-    // need censusBins(batch) — previously two full batch explodes per
-    // tick. The bins frame is the AGGREGATED ~O(sources × 71)-row
-    // census (not the q149-vetoed 26M-row token frame), so the
-    // checkpoint is a 1-row-stats-class materialization; the fold
-    // consumes bins-minus-held, which equals censusBins(admitted)
-    // bit-identically because bins are per-source additive and holds
-    // are whole-source (the unified fold does not screen).
+    // need censusBins(batch). The bins frame is the AGGREGATED
+    // ~O(sources × 71)-row census (not the q149-vetoed 26M-row token
+    // frame), so the checkpoint is a 1-row-stats-class
+    // materialization; the fold consumes bins-minus-held, which equals
+    // censusBins(admitted) bit-identically because bins are per-source
+    // additive and holds are whole-source (the unified fold does not
+    // screen).
     // Ownership handshake for the census checkpoint (ADVICE r16): the
     // probe below allocates it while a SIBLING refusal can interrupt
-    // the probe at any point, and a plain var has no happens-before
-    // edge with this thread's finally when a DIFFERENT probe fails —
-    // the old code could observe null and strand the blocks for the
-    // session. The probe publishes the checkpoint LAZILY (before any
-    // materialization job) via CAS; the finally getAndSet's a tombstone
-    // — whichever side loses the race sees the other's write and
-    // releases, so no interleaving of refusal, interrupt and
-    // materialization leaks: CAS-then-tombstone means exactly one side
-    // observes (published, not-yet-tombstoned) and releases.
+    // the probe at any point, and its result is lost when a DIFFERENT
+    // probe fails. The probe publishes the checkpoint LAZILY (before
+    // any materialization job) via CAS; the finally getAndSet's a
+    // tombstone — whichever side loses the race sees the other's write
+    // and releases, so no interleaving of refusal, interrupt and
+    // materialization leaks.
     val binsTomb = s.emptyDataFrame
     val binsRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    var rep: Seq[(String, Long, Double, Double, Double, Double, Double,
-      Boolean)] = null
-    var ord: Map[String, (Double, Boolean)] = null
     try {
-    probeConcurrently[Unit](
-      vecOrphanGate,
-      payloadOrphanGate,
+    // the four probes are independent and read-only — they overlap on
+    // the scheduler, with refusal precedence pinned to this declaration
+    // order: vector orphans, payload orphans, census
+    val verdicts = probeConcurrently[Any](
+      () => if (!vEmptyCaller) {
+        val n = orphans(vectors.select(col("vec_id").as("doc_id")))
+        require(n == 0,
+          s"appendUnifiedGated: $n batch vector(s) have no doc in " +
+            "this batch and none stored — a vectors-LEADING fold would " +
+            "carry their source past the drift breaker ungated (vectors " +
+            "have no source column) and leave the pair inconsistent if " +
+            "their docs are later held. Fold docs first (or in the same " +
+            "pair); the one-sided vectors catch-up is legal only for docs " +
+            "already folded through this gate")
+      },
+      () => payloads.filter(!_.isEmpty).foreach { p =>
+        val n = orphans(p.select(col("doc_id")))
+        require(n == 0,
+          s"appendUnifiedGated: $n batch payload(s) have no doc in " +
+            "this batch and none stored — a media-LEADING fold would " +
+            "carry their source's fingerprints past the drift breaker " +
+            "ungated (payloads have no source column). Fold docs first " +
+            "(or in the same tick); the media-only catch-up is legal " +
+            "only for docs already folded through this gate")
+      },
       () => {
         val bins = censusRequired("appendUnifiedGated", docs)
           .localCheckpoint(eager = false)
@@ -3223,28 +2918,19 @@ object IndexStore {
           // tombstoned before we published): nothing is materialized yet
           // — drop the marker and stop; this probe's result is dead
           releaseCheckpoint(bins)
-        } else {
-        // the PSI collect is the first action over `bins`, so it
-        // materializes the checkpoint inside its own job (one fewer
-        // blocking job per gated tick than the old eager checkpoint)
-        rep = Selection.psiFromBins(
-            channelFrom(s, root, prior, "mix_census")
-              .filter(col("source") === anchor)
-              .unionByName(bins.filter(col("source") =!= anchor)),
-            anchor)
-          .select(col("source"), col("n_docs"), col("psi_nchars"),
-            col("psi_ntokens"), col("psi_nonalpha"), col("psi_tokhash"),
-            col("psi_max"), (col("psi_max") > maxPsi).as("held"))
-          .as[(String, Long, Double, Double, Double, Double, Double, Boolean)]
-          .collect().toSeq
-        }
+          Seq.empty[GateRow]
+        } else
+          // the PSI collect is the first action over `bins`, so it
+          // materializes the checkpoint inside its own job
+          gateRows(s, driftVsAnchor(s, root, prior, bins, anchor), maxPsi)
       },
       // the order screen's verdict folds into the SAME held set (opt-in;
       // the screenAndFoldGated scaladoc's rationale) — it reads the
       // batch's token-position frame, which the aggregated census bins
-      // above cannot supply, so the opted-in tick pays two extra narrow
-      // batch token passes and the default tick pays nothing
-      () => ord = orderVerdict(s, docs, anchor, orderGate, maxOrderPsi))
+      // above cannot supply
+      () => orderVerdict(s, docs, anchor, orderGate, maxOrderPsi))
+    val rep = verdicts(2).asInstanceOf[Seq[GateRow]]
+    val ord = verdicts(3).asInstanceOf[Map[String, (Double, Boolean)]]
     // all probes succeeded, so the publish CAS won: the reference is
     // the live checkpoint (materialized by the PSI collect above)
     val batchBins = binsRef.get()
@@ -3264,7 +2950,7 @@ object IndexStore {
           raw.map(_.join(heldIds, Seq("vec_id"), "left_anti")),
           payloads.map(_.join(heldDocIds, Seq("doc_id"), "left_anti")))
       }
-    val censusDelta =
+    val admittedBins =
       if (heldSrcs.isEmpty) batchBins
       else batchBins.filter(!col("source").isin(heldSrcs: _*))
     // a hold that empties the vector side empties its raw pairing with
@@ -3276,7 +2962,7 @@ object IndexStore {
       if (admittedRaw.isDefined && admittedVecs.isEmpty) None
       else admittedRaw
     appendUnifiedFrom(s, root, base, prior, admittedDocs, admittedVecs,
-      rawEff, admittedPayloads, preTok, preCensus = Some(censusDelta))
+      rawEff, admittedPayloads, preTok, preCensus = Some(admittedBins))
     gateReport(s, rep, ord, orderGate)
     } finally {
       val bins = binsRef.getAndSet(binsTomb)
@@ -3381,26 +3067,33 @@ object IndexStore {
     * of the stored vectors (ADVICE r9). */
   def writeProjections(s: SparkSession, root: String,
       units: DataFrame, fineVecs: DataFrame): Unit = {
-    import s.implicits._
     require(!units.isEmpty && !fineVecs.isEmpty,
       "writeProjections: empty projected-units or exact-vectors frame — " +
         "a channel-less projected route would wedge every later lookup; " +
         "project a non-empty corpus")
     val (base, prior) = baseForWrite(root)
-    val (k, d, fineN) = projIdentityOf("writeProjections", units, fineVecs)
-    val snap = beginSnap(root)
-    units.select(col("vec_id"), col("label"), col("punit"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/proj_units")
-    maybeCrash("proj_units")
-    fineVecs.select(col("vec_id"), col("embd"), col("nsq"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/exact_vecs")
-    maybeCrash("exact_vecs")
-    commitSnap(root, snap,
-      prior -- Seq("proj_units", "exact_vecs", "proj_stats") ++ Map(
-        "proj_units" -> Channel(Seq(s"$snap/proj_units"), "", ""),
-        "exact_vecs" -> Channel(Seq(s"$snap/exact_vecs"), "", "")) ++
-        writeProjStats(s, root, snap, k, d, fineN),
-      base)
+    val identity = projIdentityOf("writeProjections", units, fineVecs)
+    transact(root, base, prior, projChannels)(
+      projDelta(s, root, units, Some(fineVecs), identity))
+  }
+
+  private val projChannels = Seq("proj_units", "exact_vecs", "proj_stats")
+
+  /** The projected family's stage block: the coarse units and (unless
+    * carried forward) the exact vectors, appended, plus the 1-row
+    * `proj_stats` identity + coverage census (k, d, this build's
+    * scheme and sign_fp, n_vecs) replacing the prior one. */
+  private def projDelta(s: SparkSession, root: String, units: DataFrame,
+      fine: Option[DataFrame], identity: (Int, Int, Long)): Stage = snap => {
+    import s.implicits._
+    val (k, d, n) = identity
+    Seq(stageParquet(units.select(col("vec_id"), col("label"), col("punit")),
+        root, snap, "proj_units", append = true)) ++
+      fine.map(f => stageParquet(f.select(col("vec_id"), col("embd"),
+        col("nsq")), root, snap, "exact_vecs", append = true)) :+
+      stageParquet(Seq((k, d, ProjScheme, signTableFp(k, d), n))
+        .toDF("k", "d", "scheme", "sign_fp", "n_vecs").coalesce(1), root,
+        snap, "proj_stats", append = false)
   }
 
   /** Re-derive the projected-ANN family at a NEW coarse width — the
@@ -3456,16 +3149,9 @@ object IndexStore {
         .select(col("vec_id"), col("label")), Seq("vec_id"))
       .select(col("vec_id"), col("label"), col("embd").as("embedding"))
     val units = Similarity.projectedUnitsOf(raw, newK)
-    val (k, d, fineN) = projIdentityOf("reprojectVectors", units, fine)
-    val snap = beginSnap(root)
-    units.select(col("vec_id"), col("label"), col("punit"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$root/$snap/proj_units")
-    maybeCrash("proj_units")
-    commitSnap(root, snap,
-      prior -- Seq("proj_units", "proj_stats") ++ Map(
-        "proj_units" -> Channel(Seq(s"$snap/proj_units"), "", "")) ++
-        writeProjStats(s, root, snap, k, d, fineN),
-      base)
+    transact(root, base, prior, Seq("proj_units", "proj_stats"))(
+      projDelta(s, root, units, None,
+        projIdentityOf("reprojectVectors", units, fine)))
   }
 
   /** The (k, d, |fineVecs|) identity facts of a projected-channel
@@ -3486,19 +3172,6 @@ object IndexStore {
       s"$op: non-uniform exact-vector widths (${f.getInt(0)}..${f.getInt(1)}) " +
         "— a single (d) identity cannot describe this frame")
     (u.getInt(0), f.getInt(0), f.getLong(2))
-  }
-
-  /** Stage the projected family's 1-row identity + coverage census
-    * (`proj_stats`) into `snap` — the vec_stats staging pattern. */
-  private def writeProjStats(s: SparkSession, root: String, snap: String,
-      k: Int, d: Int, nVecs: Long): Map[String, Channel] = {
-    import s.implicits._
-    Seq((k, d, ProjScheme, signTableFp(k, d), nVecs))
-      .toDF("k", "d", "scheme", "sign_fp", "n_vecs")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$root/$snap/proj_stats")
-    maybeCrash("proj_stats")
-    Map("proj_stats" -> Channel(Seq(s"$snap/proj_stats"), "", ""))
   }
 
   /** Coarse-to-fine ANN answered from the store alone — session q155

@@ -279,7 +279,7 @@ object StreamingOps {
     * TextIndexSpec pins the streamed store ≡ one-shot writeText on
     * channels and on query scores. After each fold the
     * `graft.store.maxSnapshots` gate (IndexStore.compactIfFragmented,
-    * all three ingest loops) bounds the store's read fan-out: a
+    * every ingest loop) bounds the store's read fan-out: a
     * long-running stream compacts every ~maxSnapshots micro-batches
     * instead of fragmenting forever — compact-only by default (safe
     * with concurrent readers; `graft.store.vacuumOnCompact=true` adds
@@ -324,32 +324,6 @@ object StreamingOps {
     try { graft.ops.IndexStore.retrainIfDrifted(s, vecIndexDir); () }
     catch { case _: java.util.ConcurrentModificationException => () }
     compactBestEffort(s, vecIndexDir)
-  }
-
-  /** [[ingestAndMaintain]] behind the governed store's drift circuit
-    * breaker (IndexStore.screenAndFoldGated): each micro-batch's
-    * sources are PSI-checked against the stored anchor census before
-    * folding, and a source whose tick would rot the mix is held out —
-    * reported, not folded — so a poisoned upstream cannot contaminate
-    * the rolling store at streaming cadence while an operator decides.
-    * Returns (decisions for admitted docs, per-source drift report
-    * with the `held` flag); sink both — the report is the audit trail
-    * the q152 timeline cannot show (what was REFUSED never enters the
-    * census). Same OCC-retry and best-effort compaction contract as
-    * the other loops. `orderGate`/`maxOrderPsi` thread to the gate's
-    * opt-in word-order self-null screen (the screenAndFoldGated
-    * contract: an order-held source is held at streaming cadence
-    * exactly like a PSI hold, and the report carries its psi_order). */
-  def ingestAndMaintainGoverned(s: SparkSession, indexDir: String,
-      batch: DataFrame, anchor: String,
-      maxPsi: Double = 0.25, orderGate: Boolean = false,
-      maxOrderPsi: Double = 0.25): (DataFrame, DataFrame) = {
-    val out = withOccRetry() {
-      graft.ops.IndexStore.screenAndFoldGated(s, indexDir, batch, anchor,
-        maxPsi, orderGate, maxOrderPsi)
-    }
-    compactBestEffort(s, indexDir)
-    out
   }
 
   /** Unified-store sibling of [[ingestAndMaintainText]] /

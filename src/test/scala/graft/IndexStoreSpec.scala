@@ -20,55 +20,6 @@ class IndexStoreSpec extends SparkSpec {
 
   private def df(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
 
-  test("crash between append channel writes leaves readers on the old consistent snapshot") {
-    val idx = tmp("crash")
-    ops.IndexStore.writeText(spark, df(docs), idx)
-    val before = ops.IndexStore.bm25FromStore(spark, idx, Seq("beta", "zeta"))
-      .orderBy($"doc_id").collect().toSeq
-    val statsBefore = ops.IndexStore.channel(spark, idx, "stats").head()
-    // inject the crash AFTER the postings files land but BEFORE
-    // doc_lens/stats/manifest/pointer — the classic torn multi-channel
-    // update the round-6 layout could only document as unsafe
-    ops.IndexStore.crashAfterChannel = Some("postings")
-    try intercept[RuntimeException] {
-      ops.IndexStore.appendText(spark, idx, df(batch))
-    } finally ops.IndexStore.crashAfterChannel = None
-    // the pointer never flipped: same scores, same stats, no torn state
-    val after = ops.IndexStore.bm25FromStore(spark, idx, Seq("beta", "zeta"))
-      .orderBy($"doc_id").collect().toSeq
-    assert(after == before, "crashed append changed reader-visible scores")
-    assert(ops.IndexStore.channel(spark, idx, "stats").head() == statsBefore)
-    // recovery: the retried append clears the aborted staging dir and
-    // lands; the store then equals a fresh full build
-    ops.IndexStore.appendText(spark, idx, df(batch))
-    val fresh = tmp("crash-fresh")
-    ops.IndexStore.writeText(spark, df(docs ++ batch), fresh)
-    for (ch <- Seq("postings", "doc_lens", "stats")) {
-      val a = ops.IndexStore.channel(spark, idx, ch)
-      val b = ops.IndexStore.channel(spark, fresh, ch)
-      assert(a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty,
-        s"channel $ch diverged after crash-recovery append")
-    }
-  }
-
-  test("crash mid dedup append: both screens keep answering from the old snapshot") {
-    val idx = tmp("dcrash")
-    ops.IndexStore.write(spark, df(docs), idx)
-    val probe = df(batch)
-    val before = ops.IndexStore.screenBatch(spark, idx, probe).collect().toSeq
-    ops.IndexStore.crashAfterChannel = Some("fingerprints")
-    try intercept[RuntimeException] {
-      ops.IndexStore.append(spark, idx, probe)
-    } finally ops.IndexStore.crashAfterChannel = None
-    assert(ops.IndexStore.screenBatch(spark, idx, probe).collect().toSeq == before,
-      "crashed append changed screen decisions")
-    // retry lands and the batch's twin (doc 5 ≡ doc 1) now flags exact
-    ops.IndexStore.append(spark, idx, probe)
-    val dec = ops.IndexStore.screenBatch(spark, idx, df(Seq(9L -> docs.head._2)))
-      .select($"decision").head().getString(0)
-    assert(dec == "drop_exact")
-  }
-
   test("a directory without a snapshot pointer is refused, never misread") {
     val dir = tmp("foreign")
     // even one that LOOKS like a flat-layout store

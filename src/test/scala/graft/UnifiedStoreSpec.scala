@@ -513,31 +513,6 @@ class UnifiedStoreSpec extends SparkSpec {
       "the serving clone moved the media census")
   }
 
-  test("a crash between the media write and the pair commit leaves readers on the old snapshot") {
-    val root = tmp("mediacrash")
-    ops.IndexStore.writeUnified(spark, docsOf(0 to 5), vecsOf(0 to 5),
-      cents, root, payloads = Some(paysOf(0 to 5)))
-    val h0 = ops.IndexStore.history(root)
-    val (lex0, ann0) = (lex(root), ann(root, 0))
-    val pairs0 = ops.IndexStore.mediaPairsFromStore(spark, root).collect().toSeq
-    ops.IndexStore.crashAfterChannel = Some("media_sim_blocks")
-    try intercept[RuntimeException] {
-      ops.IndexStore.appendUnified(spark, root, docsOf(6 to 11),
-        vecsOf(6 to 11), payloads = Some(paysOf(6 to 11, twinBase = 6)))
-    } finally ops.IndexStore.crashAfterChannel = None
-    assert(ops.IndexStore.history(root) == h0,
-      "crashed media-carrying fold committed a snapshot")
-    assert(lex(root) == lex0 && ann(root, 0) == ann0 &&
-      ops.IndexStore.mediaPairsFromStore(spark, root).collect().toSeq == pairs0,
-      "crashed media-carrying fold changed a visible read")
-    // the retry lands all THREE families in one commit
-    ops.IndexStore.appendUnified(spark, root, docsOf(6 to 11),
-      vecsOf(6 to 11), payloads = Some(paysOf(6 to 11, twinBase = 6)))
-    assert(ops.IndexStore.history(root).size == h0.size + 1 &&
-      ops.IndexStore.mediaPairsFromStore(spark, root).count() > 0,
-      "retry must publish exactly one new version carrying the media delta")
-  }
-
   test("the media contract: media-less store refuses payloads; media-only catch-up folds; fresh media on a replayed pair is a mispairing") {
     val root = tmp("mediacontract")
     ops.IndexStore.writeUnified(spark, docsOf(0 to 5), vecsOf(0 to 5),
